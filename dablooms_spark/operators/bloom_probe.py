@@ -9,21 +9,24 @@ joins on the range (future work, see plans/).
 
 `bloom_semi_join` is the runtime-filter pattern: probe → filter →
 (optionally) exact semi-join the surviving candidates. With exact
-verification the result is exactly LEFT SEMI JOIN — the bloom only
-prunes the shuffle — which at 100 TB is the point: the big side never
-shuffles rows the filter already rejected, and the bloom has no false
-negatives so no row is lost.
+verification the result is exactly LEFT SEMI JOIN, and the filter
+prunes only when the confirm join would shuffle: at 100 TB the big
+side never shuffles rows the filter already rejected (the bloom has
+no false negatives, so no row is lost), while a confirm side small
+enough to broadcast never shuffles the probe side at all, so the probe
+is skipped and the plain broadcast join runs (Spark's
+InjectRuntimeFilter skips shuffle-free joins for the same reason).
+Every bloom semi/anti join in the library goes through `_filtered_join`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
@@ -70,42 +73,19 @@ def _check_arrow(arr: pa.Array, blob: bytes, seed: int) -> "np.ndarray":
     return verdict
 
 
-def _check_series(series: pd.Series, blob: bytes, seed: int) -> pd.Series:
-    arr = pa.array(series, type=pa.large_string())
-    return pd.Series(_check_arrow(arr, blob, seed))
-
-
-try:  # Spark 4.1+: true Arrow UDFs — the probe never touches pandas
-    from pyspark.sql.functions import arrow_udf as _arrow_udf
-except ImportError:  # pragma: no cover - older Spark fallback
-    _arrow_udf = None
-
-
 def bloom_probe_udf(spark, bloom, seed: int = DABLOOMS_SEED):
     """A reusable vectorized UDF closing over the broadcast filter.
 
-    With Spark 4.1+'s arrow_udf the probe is end-to-end zero-copy:
-    Arrow string buffers in, hash kernel, boolean buffer out — no
-    per-row Python string objects are ever materialized (the pandas
-    round trip creates one str per key). Falls back to a pandas UDF
-    on older runtimes."""
+    The probe is end-to-end zero-copy: Arrow string buffers in, hash
+    kernel, boolean buffer out — no per-row Python string objects are
+    ever materialized."""
     bc = spark.sparkContext.broadcast(bloom.to_bytes())
 
-    if _arrow_udf is not None:
-
-        @_arrow_udf("boolean")
-        def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-            blob = bc.value
-            for arr in it:
-                yield pa.array(_check_arrow(arr, blob, seed))
-
-        return probe
-
-    @pandas_udf("boolean")
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @arrow_udf("boolean")
+    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         blob = bc.value
-        for series in it:
-            yield _check_series(series, blob, seed)
+        for arr in it:
+            yield pa.array(_check_arrow(arr, blob, seed))
 
     return probe
 
@@ -142,19 +122,15 @@ def bloom_semi_join(
 ) -> DataFrame:
     """probe_df rows whose key the filter reports present.
 
-    With `exact_df`, surviving candidates are confirmed by a real
-    LEFT SEMI join — exact results, bloom-pruned shuffle.
+    With `exact_df`, the result is exactly the LEFT SEMI join; the
+    filter prunes only when the confirm join would shuffle (see
+    `_filtered_join`), otherwise the plain broadcast join runs.
     """
-    out = bloom_probe_column(probe_df, key_col, bloom, "__bloom_hit", seed, key_cast)
-    out = out.filter(F.col("__bloom_hit")).drop("__bloom_hit")
-    if exact_df is not None:
-        ek = exact_key or key_col
-        out = out.join(
-            _semi_dim(exact_df, ek),
-            on=F.col(key_col) == F.col("__ek"),
-            how="left_semi",
-        )
-    return out
+    return _filtered_join(
+        probe_df, key_col,
+        lambda df, col: bloom_probe_column(df, key_col, bloom, col, seed, key_cast),
+        exact_df, exact_key, "left_semi",
+    )
 
 
 def bloom_anti_join(
@@ -171,22 +147,65 @@ def bloom_anti_join(
     ⇒ a 'not present' verdict is definite), but false positives drop
     some genuinely-absent rows.
 
-    With `exact_df`: exact LEFT ANTI JOIN semantics — bloom-misses pass
+    With `exact_df`: exact LEFT ANTI JOIN semantics. The filter prunes
+    only when the confirm join would shuffle: then bloom-misses pass
     straight through (definite negatives, no join work), and only the
-    small bloom-hit candidate set pays for an exact anti join. At scale
-    the expensive join runs on ~|dim| + ε·|probe| rows instead of all
-    of probe_df."""
-    out = bloom_probe_column(probe_df, key_col, bloom, "__bloom_hit", seed, key_cast)
-    misses = out.filter(~F.col("__bloom_hit")).drop("__bloom_hit")
-    if exact_df is None:
-        return misses
-    ek = exact_key or key_col
-    dim = _semi_dim(exact_df, ek)
-    candidates = out.filter(F.col("__bloom_hit")).drop("__bloom_hit")
-    confirmed_absent = candidates.join(
-        dim, on=F.col(key_col) == F.col("__ek"), how="left_anti"
+    small bloom-hit candidate set pays for an exact anti join — at
+    scale the expensive join runs on ~|dim| + ε·|probe| rows instead of
+    all of probe_df. A broadcastable `exact_df` skips the probe."""
+    return _filtered_join(
+        probe_df, key_col,
+        lambda df, col: bloom_probe_column(df, key_col, bloom, col, seed, key_cast),
+        exact_df, exact_key, "left_anti",
     )
-    return misses.unionByName(confirmed_absent)
+
+
+def _filtered_join(
+    probe_df: DataFrame,
+    key_col: str,
+    add_verdict: Callable[[DataFrame, str], DataFrame],
+    exact_df: DataFrame | None,
+    exact_key: str | None,
+    how: str,
+    always_probe: bool = False,
+) -> DataFrame:
+    """The one confirm path behind every bloom semi/anti join.
+
+    `add_verdict(df, col)` appends the filter's Boolean verdict as
+    `col` (no false negatives). Without `exact_df` the verdict alone
+    answers: hits for left_semi, misses (definite negatives) for
+    left_anti. With `exact_df` — which must hold only keys the filter
+    was built over — the result is exactly `probe_df LEFT SEMI/ANTI
+    JOIN exact_df` on the key, because filter ∧ exact = exact.
+
+    The filter prunes only when the confirm join would shuffle. When
+    `_semi_dim` broadcasts the exact side, the probe side never
+    shuffles, so there is nothing to prune: the plain broadcast join is
+    returned and `add_verdict` is never called (no blob is collected,
+    broadcast or assembled). Otherwise the probe side sheds bloom
+    misses first and only the hits are confirmed; an anti join passes
+    the misses straight through. `always_probe` keeps the probe for a
+    caller that asked for that topology. The choice is stamped on the
+    result as `confirm_path` ("broadcast" | "probe")."""
+    cond = F.col(key_col) == F.col("__ek")
+    if exact_df is not None:
+        dim, broadcast = _semi_dim(exact_df, exact_key or key_col)
+        if broadcast and not always_probe:
+            out = probe_df.join(dim, cond, how)
+            out.confirm_path = "broadcast"
+            return out
+    probed = add_verdict(probe_df, "__bloom_hit")
+    hits = probed.filter(F.col("__bloom_hit")).drop("__bloom_hit")
+    if exact_df is not None:
+        hits = hits.join(dim, cond, how)
+    if how == "left_semi":
+        out = hits
+    else:
+        out = probed.filter(~F.col("__bloom_hit")).drop("__bloom_hit")
+        if exact_df is not None:
+            out = out.unionByName(hits)
+    out.confirm_path = "probe"
+    return out
 
 
 def _parse_size_bytes(v: str) -> int:
@@ -202,28 +221,36 @@ def _parse_size_bytes(v: str) -> int:
     return int(float(s)) * mult
 
 
-def _semi_dim(exact_df: DataFrame, ek: str):
-    """Build side for the exact LEFT SEMI/ANTI confirm join.
-
-    Semi/anti joins are insensitive to build-side duplicates, so the
-    distinct() is ONLY worth its Exchange + aggregate when the dim is
-    too big to broadcast (there, dedup shrinks the join shuffle).
-    Dims under spark.sql.autoBroadcastJoinThreshold skip it and
-    broadcast directly — one stage fewer, identical results."""
-    dim = exact_df.select(F.col(ek).alias("__ek"))
-    spark = exact_df.sparkSession
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Catalyst's sizeInBytes estimate of `df` is within
+    spark.sql.autoBroadcastJoinThreshold ('-1' disables). A failed
+    estimate counts as too big: the shuffled path is always correct."""
     try:
         thr = _parse_size_bytes(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
+            df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
         )
-        est = int(
-            dim._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
-        thr, est = 0, 1
-    if 0 <= est <= thr:
-        return F.broadcast(dim)
-    return dim.distinct()
+        return False
+    return 0 <= est <= thr
+
+
+def _semi_dim(exact_df: DataFrame, ek: str) -> tuple[DataFrame, bool]:
+    """(build side, broadcasts?) for the exact LEFT SEMI/ANTI confirm
+    join.
+
+    The size bound is the key PROJECTION's estimate against Spark's own
+    spark.sql.autoBroadcastJoinThreshold — no option of ours. Under it
+    the projection is broadcast as is: semi/anti joins are insensitive
+    to build-side duplicates, so a distinct() would only add an
+    Exchange + aggregate. Over it (or at '-1') the projection is
+    distinct()ed, because dedup shrinks the shuffled join's build side.
+    `_filtered_join` skips the filter probe exactly when this
+    broadcasts."""
+    dim = exact_df.select(F.col(ek).alias("__ek"))
+    if _fits_broadcast(dim):
+        return F.broadcast(dim), True
+    return dim.distinct(), False
 
 
 _INTEGRAL_TYPES = ("byte", "short", "integer", "long")
@@ -286,7 +313,6 @@ def _auto_runtime_join(
     from dablooms_spark.core.geometry import BloomGeometry
     from dablooms_spark.operators.bloom_build import build_counting_bloom
 
-    spark = probe_df.sparkSession
     dk = dim_key or on
     dim_keys = dim_df.select(F.col(dk))
     n_keys: int | None = None
@@ -295,13 +321,7 @@ def _auto_runtime_join(
     )
 
     if strategy == "auto":
-        thr = _parse_size_bytes(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
-        )
-        size = int(
-            dim_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if 0 <= size <= thr:
+        if _fits_broadcast(dim_df):
             strategy = "broadcast"
         elif not bloom_safe:
             # key types string-render differently → bloom would false-
@@ -349,16 +369,13 @@ def _auto_runtime_join(
                 dim_keys_str, dk, capacity=max(n_keys, 1),
                 error_rate=error_rate, seed=seed,
             )
-            join_fn = bloom_semi_join if how == "left_semi" else bloom_anti_join
-            out = join_fn(
-                probe_df, on, filt, exact_df=dim_df, exact_key=dk, seed=seed,
-                key_cast=key_cast,
-            )
+
+            def add_verdict(df, col):
+                return bloom_probe_column(df, on, filt, col, seed, key_cast)
         else:
             from dablooms_spark.operators.sharded import (
                 build_sharded_counting_bloom,
-                sharded_anti_join,
-                sharded_semi_join,
+                sharded_bloom_probe,
             )
 
             blob_size = BloomGeometry(max(n_keys, 1), error_rate).size
@@ -367,13 +384,18 @@ def _auto_runtime_join(
                 dim_keys_str, dk, capacity=max(n_keys, 1),
                 error_rate=error_rate, num_shards=num_shards, seed=seed,
             )
-            join_fn = (
-                sharded_semi_join if how == "left_semi" else sharded_anti_join
-            )
-            out = join_fn(
-                probe_df, on, blobs, exact_df=dim_df, exact_key=dk,
-                num_shards=num_shards, seed=seed, key_cast=key_cast,
-            )
+
+            def add_verdict(df, col):
+                return sharded_bloom_probe(
+                    df, on, blobs, num_shards, seed=seed, out_col=col,
+                    key_cast=key_cast,
+                )
+        # the caller (or the stats, when the dim does not broadcast)
+        # chose a filter topology: probe even if the key projection
+        # alone would broadcast
+        out = _filtered_join(
+            probe_df, on, add_verdict, dim_df, dk, how, always_probe=True
+        )
     elif strategy == "shuffle":
         out = probe_df.join(dimsel.distinct(), cond, how)
     else:

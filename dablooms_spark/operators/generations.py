@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
+from dablooms_spark.operators.bloom_probe import _filtered_join
 from dablooms_spark.operators.sharded import _shard_expr
 
 _UNIT_SECONDS = {
@@ -275,17 +276,16 @@ def generation_semi_join(
 ) -> DataFrame:
     """probe rows whose key was seen in the live window: bloom-prune
     (no false negatives), optionally confirm survivors exactly — the
-    bloom_semi_join contract at the rotating-window topology."""
-    out = generation_window_probe(
-        probe_df, key_col, gens_df, as_of_gen, window, num_shards, seed,
-        out_col="__hit",
+    bloom_semi_join contract at the rotating-window topology.
+    `exact_df` holds the live window's keys; the filter prunes only
+    when the confirm join would shuffle, so a broadcastable `exact_df`
+    skips the window probe for the plain broadcast semi join."""
+    live_window(gens_df, as_of_gen, window)  # reject a bad window eagerly
+    return _filtered_join(
+        probe_df, key_col,
+        lambda df, col: generation_window_probe(
+            df, key_col, gens_df, as_of_gen, window, num_shards, seed,
+            out_col=col,
+        ),
+        exact_df, exact_key, "left_semi",
     )
-    out = out.filter(F.col("__hit")).drop("__hit")
-    if exact_df is not None:
-        ek = exact_key or key_col
-        out = out.join(
-            exact_df.select(F.col(ek).alias("__ek")).distinct(),
-            on=F.col(key_col) == F.col("__ek"),
-            how="left_semi",
-        )
-    return out

@@ -16,7 +16,9 @@ Scale shape per batch (none of these steps collect rows):
   * split        — broadcast-blob probe; bloom misses are DEFINITE
                    new keys (no false negatives); with exact_seen_df
                    the ε-sized hit set is verified by a real anti join,
-                   making the split exact
+                   making the split exact — and since the filter prunes
+                   only when that join would shuffle, a broadcastable
+                   exact_seen_df skips the probe for a plain anti join
   * add + commit — per-partition partial blobs over the batch, unioned
                    with the prior blob, counter-sum merged cluster-side
                    to one row, committed under the next seqnum with
@@ -36,7 +38,11 @@ from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.serde import loads
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 from dablooms_spark.operators.bloom_build import counting_bloom_partials, merge_blobs_df
-from dablooms_spark.operators.bloom_probe import bloom_anti_join
+from dablooms_spark.operators.bloom_probe import (
+    _filtered_join,
+    bloom_anti_join,
+    bloom_probe_column,
+)
 from dablooms_spark.sources.checkpoint import CheckpointManager
 
 
@@ -115,6 +121,9 @@ def incremental_ingest(
     keys, e.g. the upstream table filtered to earlier partitions) is
     given; otherwise within the filter's false-positive bound (a few
     genuinely-new rows may be misclassified seen — never the reverse).
+    The filter prunes only when the exact anti join would shuffle: an
+    exact_seen_df under spark.sql.autoBroadcastJoinThreshold splits
+    the batch by a plain broadcast anti join, with no filter probe.
 
     The returned DataFrame is lazy; the filter update is committed
     eagerly (blob algebra only — the batch is scanned once for
@@ -191,27 +200,6 @@ def _artifact_bytes(blob_dir: str, layers_df: DataFrame) -> int:
     return int(row["b"] or 0)
 
 
-def _anti_from_flag(
-    probed: DataFrame,
-    key_col: str,
-    flag_col: str,
-    exact_seen_df: DataFrame | None,
-    exact_key: str | None,
-) -> DataFrame:
-    """bloom_anti_join's split semantics from a probed flag column:
-    misses are definite new keys (no false negatives); with an exact
-    seen-set the ε-sized hit set is verified by a real anti join."""
-    misses = probed.filter(~F.col(flag_col)).drop(flag_col)
-    if exact_seen_df is None:
-        return misses
-    ek = exact_key or key_col
-    dim = exact_seen_df.select(F.col(ek).alias("__ek")).distinct()
-    candidates = probed.filter(F.col(flag_col)).drop(flag_col)
-    return misses.unionByName(
-        candidates.join(dim, on=F.col(key_col) == F.col("__ek"), how="left_anti")
-    )
-
-
 def incremental_ingest_scaling(
     batch_df: DataFrame,
     key_col: str,
@@ -280,11 +268,10 @@ def incremental_ingest_scaling(
                 "(use incremental_ingest for that run)"
             )
         if _artifact_bytes(manifest["blob_dir"], prior_layers) <= broadcast_blob_budget:
-            prior = assemble_scaling_bloom(prior_layers.collect(), seed)
-            new_rows = bloom_anti_join(
-                batch_df, key_col, prior,
-                exact_df=exact_seen_df, exact_key=exact_key, seed=seed,
-            )
+            # assembled on the driver only if the split probes at all
+            def add_seen(df, col):
+                prior = assemble_scaling_bloom(prior_layers.collect(), seed)
+                return bloom_probe_column(df, key_col, prior, col, seed)
         else:
             # beyond broadcast size: the prior filter never visits the
             # driver — probe the layer rows as ONE logical shard
@@ -292,20 +279,22 @@ def incremental_ingest_scaling(
             # across `salt` tasks; the layer side replicates to each).
             # Identical split semantics: bloom misses are definite new
             # keys; with exact_seen_df the ε-sized hit set is verified
-            # by a real anti join (mirrors bloom_anti_join).
+            # by a real anti join.
             from dablooms_spark.operators.sharded_scaling import (
                 sharded_scaling_probe,
             )
 
             salt = split_salt or max(8, spark.sparkContext.defaultParallelism)
             one_shard = prior_layers.withColumn("shard", F.lit(0).cast("long"))
-            probed = sharded_scaling_probe(
-                batch_df, key_col, one_shard, num_shards=1, salt=salt,
-                seed=seed, out_col="__seen",
-            )
-            new_rows = _anti_from_flag(
-                probed, key_col, "__seen", exact_seen_df, exact_key
-            )
+
+            def add_seen(df, col):
+                return sharded_scaling_probe(
+                    df, key_col, one_shard, num_shards=1, salt=salt,
+                    seed=seed, out_col=col,
+                )
+        new_rows = _filtered_join(
+            batch_df, key_col, add_seen, exact_seen_df, exact_key, "left_anti"
+        )
     else:
         new_rows = batch_df
 
@@ -419,12 +408,13 @@ def incremental_ingest_sharded_scaling(
         # such artifacts the same way) so the union and merge below —
         # whose schemas require the column — accept them too
         prior_layers = _ensure_num_shards(prior_layers, num_shards)
-        probed = sharded_scaling_probe(
-            batch_df, key_col, prior_layers, num_shards=num_shards,
-            salt=salt, seed=seed, out_col="__seen",
-        )
-        new_rows = _anti_from_flag(
-            probed, key_col, "__seen", exact_seen_df, exact_key
+        new_rows = _filtered_join(
+            batch_df, key_col,
+            lambda df, col: sharded_scaling_probe(
+                df, key_col, prior_layers, num_shards=num_shards,
+                salt=salt, seed=seed, out_col=col,
+            ),
+            exact_seen_df, exact_key, "left_anti",
         )
     else:
         new_rows = batch_df

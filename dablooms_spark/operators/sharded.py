@@ -36,16 +36,13 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
-
-try:  # Spark 4.1+: true Arrow UDFs for the broadcast probe path
-    from pyspark.sql.functions import arrow_udf as _arrow_udf
-except ImportError:  # pragma: no cover - older Spark fallback
-    _arrow_udf = None
+from dablooms_spark.operators.bloom_probe import _filtered_join
 
 _SHARD_SEED = 0x5D
 
@@ -98,9 +95,8 @@ def _measure_blobs(blobs_df: DataFrame) -> tuple[DataFrame, int]:
 def _broadcast_counting_probe_udf(spark, shard_blobs: dict, seed: int):
     """Vectorized membership UDF over (key_str, shard) against a
     broadcast {shard: blob} dict — the shuffle-free probe for sharded
-    counting filters small enough to replicate. Arrow-native on Spark
-    4.1+, pandas fallback otherwise; filters deserialize once per task
-    (iterator form, guide §4.5)."""
+    counting filters small enough to replicate. Arrow-native; filters
+    deserialize once per task (iterator form, guide §4.5)."""
     bc = spark.sparkContext.broadcast(shard_blobs)
 
     def probe_batch(keys: pa.Array, shards: np.ndarray, cache: dict) -> np.ndarray:
@@ -124,25 +120,12 @@ def _broadcast_counting_probe_udf(spark, shard_blobs: dict, seed: int):
             verdict &= ~np.asarray(pa.compute.is_null(keys))
         return verdict
 
-    if _arrow_udf is not None:
-        @_arrow_udf("boolean")
-        def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
-            cache: dict = {}
-            for keys, shards in it:
-                sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
-                yield pa.array(probe_batch(keys, sh, cache))
-
-        return probe
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def probe(it: TIterator[TTuple[pd.Series, pd.Series]]) -> TIterator[pd.Series]:
+    @arrow_udf("boolean")
+    def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
         cache: dict = {}
         for keys, shards in it:
-            arr = pa.array(keys, type=pa.large_string())
-            sh = shards.to_numpy(dtype=np.int64, na_value=0)
-            yield pd.Series(probe_batch(arr, sh, cache))
+            sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
+            yield pa.array(probe_batch(keys, sh, cache))
 
     return probe
 
@@ -412,21 +395,17 @@ def sharded_semi_join(
 ) -> DataFrame:
     """Semi join against a sharded filter: bloom-prune (no false
     negatives), then optionally confirm survivors exactly — the
-    bloom_semi_join contract at filter sizes broadcast can't reach."""
-    out = sharded_bloom_probe(
-        probe_df, key_col, blobs_df, num_shards, salt, seed, "__hit", key_cast
+    bloom_semi_join contract at filter sizes broadcast can't reach.
+    The filter prunes only when the confirm join would shuffle: a
+    broadcastable `exact_df` skips the probe (and the blob measuring
+    and collecting it would do) for the plain broadcast join."""
+    return _filtered_join(
+        probe_df, key_col,
+        lambda df, col: sharded_bloom_probe(
+            df, key_col, blobs_df, num_shards, salt, seed, col, key_cast
+        ),
+        exact_df, exact_key, "left_semi",
     )
-    out = out.filter(F.col("__hit")).drop("__hit")
-    if exact_df is not None:
-        ek = exact_key or key_col
-        from dablooms_spark.operators.bloom_probe import _semi_dim
-
-        out = out.join(
-            _semi_dim(exact_df, ek),
-            on=F.col(key_col) == F.col("__ek"),
-            how="left_semi",
-        )
-    return out
 
 
 def sharded_anti_join(
@@ -443,19 +422,13 @@ def sharded_anti_join(
     """LEFT ANTI against a sharded filter: bloom misses pass straight
     through (definite negatives); with exact_df only the ε-sized hit
     set pays for an exact anti join — bloom_anti_join's contract at
-    filter sizes broadcast can't reach."""
-    out = sharded_bloom_probe(
-        probe_df, key_col, blobs_df, num_shards, salt, seed, "__hit", key_cast
+    filter sizes broadcast can't reach. The filter prunes only when
+    the confirm join would shuffle: a broadcastable `exact_df` skips
+    the probe for the plain broadcast anti join."""
+    return _filtered_join(
+        probe_df, key_col,
+        lambda df, col: sharded_bloom_probe(
+            df, key_col, blobs_df, num_shards, salt, seed, col, key_cast
+        ),
+        exact_df, exact_key, "left_anti",
     )
-    misses = out.filter(~F.col("__hit")).drop("__hit")
-    if exact_df is None:
-        return misses
-    ek = exact_key or key_col
-    from dablooms_spark.operators.bloom_probe import _semi_dim
-
-    dim = _semi_dim(exact_df, ek)
-    candidates = out.filter(F.col("__hit")).drop("__hit")
-    confirmed_absent = candidates.join(
-        dim, on=F.col(key_col) == F.col("__ek"), how="left_anti"
-    )
-    return misses.unionByName(confirmed_absent)

@@ -47,6 +47,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from dablooms_spark.core.counting_bloom import CountingBloom
@@ -54,6 +55,7 @@ from dablooms_spark.core.geometry import BloomGeometry
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.hashing import km_expand
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
+from dablooms_spark.operators.bloom_probe import _filtered_join
 from dablooms_spark.operators.sharded import (
     _SHARD_SEED,
     _measure_blobs,
@@ -381,28 +383,12 @@ def _broadcast_scaling_probe_udf(spark, shard_layers: dict, seed: int):
             verdict &= ~np.asarray(pa.compute.is_null(keys))
         return verdict
 
-    from dablooms_spark.operators import sharded as _sharded
-
-    if _sharded._arrow_udf is not None:
-        _arrow_udf = _sharded._arrow_udf
-        @_arrow_udf("boolean")
-        def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
-            cache: dict = {}
-            for keys, shards in it:
-                sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
-                yield pa.array(probe_batch(keys, sh, cache))
-
-        return probe
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def probe(it: TIterator[TTuple[pd.Series, pd.Series]]) -> TIterator[pd.Series]:
+    @arrow_udf("boolean")
+    def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
         cache: dict = {}
         for keys, shards in it:
-            arr = pa.array(keys, type=pa.large_string())
-            sh = shards.to_numpy(dtype=np.int64, na_value=0)
-            yield pd.Series(probe_batch(arr, sh, cache))
+            sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
+            yield pa.array(probe_batch(keys, sh, cache))
 
     return probe
 
@@ -711,18 +697,13 @@ def sharded_scaling_semi_join(
     """Semi join against a sharded scaling filter: bloom-prune (no
     false negatives), optionally confirm survivors exactly — the
     bloom_semi_join contract at scaling-filter sizes broadcast can't
-    reach."""
-    out = sharded_scaling_probe(
-        probe_df, key_col, layers_df, num_shards, salt, seed, "__hit"
+    reach. The filter prunes only when the confirm join would shuffle:
+    a broadcastable `exact_df` skips the probe (and its layer
+    measuring and collecting) for the plain broadcast join."""
+    return _filtered_join(
+        probe_df, key_col,
+        lambda df, col: sharded_scaling_probe(
+            df, key_col, layers_df, num_shards, salt, seed, col
+        ),
+        exact_df, exact_key, "left_semi",
     )
-    out = out.filter(F.col("__hit")).drop("__hit")
-    if exact_df is not None:
-        ek = exact_key or key_col
-        from dablooms_spark.operators.bloom_probe import _semi_dim
-
-        out = out.join(
-            _semi_dim(exact_df, ek),
-            on=F.col(key_col) == F.col("__ek"),
-            how="left_semi",
-        )
-    return out

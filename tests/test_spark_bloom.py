@@ -152,24 +152,6 @@ def test_webpages_bloom_end_to_end(spark):
     assert fp / 10_000 <= 0.05 * 1.2
 
 
-def test_probe_pandas_fallback_matches_arrow(spark, docs, monkeypatch):
-    """The pandas_udf fallback (pre-4.1 runtimes) must verdict
-    identically to the arrow_udf hot path."""
-    import dablooms_spark.operators.bloom_probe as bp
-
-    filt = build_counting_bloom(docs, "text", capacity=600, error_rate=0.05)
-    probe_df = docs.select("doc_id", "text").union(
-        docs.sparkSession.range(300).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("absent-"), F.col("id")).alias("text"),
-        )
-    )
-    arrow = {r.doc_id: r.is_member for r in bloom_probe_column(probe_df, "text", filt).collect()}
-    monkeypatch.setattr(bp, "_arrow_udf", None)
-    pandas_ = {r.doc_id: r.is_member for r in bp.bloom_probe_column(probe_df, "text", filt).collect()}
-    assert arrow == pandas_
-
-
 def test_auto_semi_join_strategies_exact_and_plan(spark, sf_dir):
     """auto_semi_join returns exactly LEFT SEMI under all three
     strategies, records its decision, and the physical plan matches:
