@@ -42,6 +42,26 @@ _VERSION = 1
 _HDR = struct.Struct("<4sHHQdQII")
 
 
+def check_layers(layers, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+    """OR of counting-bloom `layers`, given NEWEST FIRST, over pre-hashed
+    keys — the loop of scaling_bloom_check (≈L537); a plain counting
+    filter is the one-layer case. At steady state most hits are recent,
+    so a key that answers positive skips every older layer's index
+    expansion."""
+    verdict = np.zeros(len(h1), dtype=bool)
+    for i, layer in enumerate(layers):
+        if i == 0:
+            # every key is pending: no masked copy of the hashes, so
+            # a one-layer filter costs what its own check costs
+            verdict[:] = layer.check_hashed(h1, h2)
+            continue
+        pending = ~verdict
+        if not pending.any():
+            break
+        verdict[pending] = layer.check_hashed(h1[pending], h2[pending])
+    return verdict
+
+
 class ScalingBloom:
     __slots__ = ("capacity", "error_rate", "seed", "layers", "max_id")
 
@@ -158,18 +178,7 @@ class ScalingBloom:
         return self.check_hashed(h1, h2)
 
     def check_hashed(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        n = len(h1)
-        if n == 0:
-            return np.empty(0, dtype=bool)
-        verdict = np.zeros(n, dtype=bool)
-        # Newest layer first: at steady state most hits are recent, and
-        # skipping already-positive rows saves index expansion work.
-        for layer in reversed(self.layers):
-            pending = ~verdict
-            if not pending.any():
-                break
-            verdict[pending] = layer.check_hashed(h1[pending], h2[pending])
-        return verdict
+        return check_layers(reversed(self.layers), h1, h2)
 
     @property
     def count(self) -> int:

@@ -34,6 +34,7 @@ from dablooms_spark.core.scaling_bloom import ScalingBloom
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.hashing import km_expand
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
+from dablooms_spark.operators.sizing import conf_bytes, fits_driver_merge, plan_bytes
 
 # Chunked piece flush: the sparse-piece stages (here, sharded_scaling,
 # bloom_remove) accumulate nfuncs-expanded int64 index arrays per
@@ -307,35 +308,6 @@ def _chunked_counting_merge(
     )
 
 
-def _driver_merge_max_bytes(spark) -> int:
-    """Catalyst-estimated input ceiling under which a build's sparse
-    pieces are collected and merged DRIVER-SIDE instead of through a
-    groupBy exchange (spark.dablooms.build.driverMergeMaxBytes, size
-    string, default 32 MiB; '0' disables). Interleaved same-session
-    A/B on the bench build: driver fold 0.869 s vs distributed merge
-    0.958 s end-to-end — the fold also removes a stage, a shuffle and
-    a pandas round-trip. Above the ceiling the distributed merge
-    keeps the driver out of the data path (guide §5)."""
-    from dablooms_spark.operators.bloom_probe import _parse_size_bytes
-
-    try:
-        return _parse_size_bytes(
-            spark.conf.get("spark.dablooms.build.driverMergeMaxBytes", "32m")
-        )
-    except Exception:
-        return 32 << 20
-
-
-def _est_plan_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate, or None."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return None
-
-
 def _driver_counting_merge(
     pieces: DataFrame, capacity: int, error_rate: float, seed: int, num_chunks: int
 ) -> CountingBloom:
@@ -445,18 +417,10 @@ def build_counting_bloom(
         dp = spark.sparkContext.defaultParallelism
         np_ = _static_num_partitions(df)
         if np_ is not None and 0 < np_ < dp:
-            from dablooms_spark.operators.bloom_probe import _parse_size_bytes
-
-            try:
-                min_bytes = _parse_size_bytes(
-                    spark.conf.get("spark.dablooms.build.fanoutMinBytes", "256m")
-                )
-                est = int(
-                    df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-                )
-            except Exception:
-                min_bytes, est = 1, 0
-            if est >= min_bytes:
+            est = plan_bytes(df)
+            if est is not None and est >= conf_bytes(
+                spark, "spark.dablooms.build.fanoutMinBytes", "256m"
+            ):
                 auto_parts = dp
     g = BloomGeometry(capacity, error_rate)
     if g.size > 2_000_000:
@@ -476,9 +440,8 @@ def build_counting_bloom(
         pieces = _chunk_pieces_build(sdf, capacity, error_rate, seed, num_chunks)
         # small inputs skip the piece exchange entirely: collect the
         # sparse pieces and fold driver-side (bit-identical; see
-        # _driver_merge_max_bytes for the measured stage cost)
-        est = _est_plan_bytes(df)
-        if est is not None and 0 <= est <= _driver_merge_max_bytes(df.sparkSession):
+        # sizing.fits_driver_merge for the measured stage cost)
+        if fits_driver_merge(df):
             return _driver_counting_merge(pieces, capacity, error_rate, seed, num_chunks)
         return _chunked_counting_merge(pieces, capacity, error_rate, seed, num_chunks)
     blob_df = counting_bloom_partials(
@@ -1163,8 +1126,7 @@ def build_scaling_bloom(
     layer-row checkpoint write when the filter is too big to
     collect."""
     if id_layout == "dense":
-        est = _est_plan_bytes(df)
-        if est is not None and 0 <= est <= _driver_merge_max_bytes(df.sparkSession):
+        if fits_driver_merge(df):
             # small input: collect stage-1 pieces and fold driver-side,
             # skipping the groupBy(layer) exchange + pandas stage —
             # bit-identical (piece-boundary invariance)

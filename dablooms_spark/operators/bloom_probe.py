@@ -1,11 +1,18 @@
-"""Bloom probe — the read path, broadcast to every probe task.
+"""Bloom probe — the one membership-probe kernel and the broadcast
+read path.
 
-Spark equivalent of scaling_bloom_check / counting_bloom_check
-(src/dablooms.c:≈537/≈238): the merged filter blob is broadcast once;
-probe batches gain a Boolean verdict column via a vectorized Arrow
-UDF. A filter sized for 10^8 keys at ε=0.01 is ~100 MB of nibbles —
-broadcastable; bigger corpora shard the filter by key range and probe
-joins on the range (future work, see plans/).
+dablooms has one read path, scaling_bloom_check (src/dablooms.c
+≈L537): hash the key once, then check the counting layers newest
+first; a plain counting filter (counting_bloom_check ≈L238) is the
+one-layer case. Here every membership probe runs that path through
+`_probe_kernel`: a filter is a table {shard: [counting layers, newest
+first]} — {0: [filter]} for a counting filter, {0: its layers} for a
+scaling filter, one entry per shard for a sharded one — and the kernel
+hashes an Arrow key batch once, then walks the layers of each shard the
+batch touches with early skip (core.scaling_bloom.check_layers). A NULL
+key is never a member. Its callers are the broadcast UDF built here
+(`bloom_probe_column`, one shard; the sharded form routes each key by a
+shard column) and the per-group cogroup probe of operators/sharded.py.
 
 `bloom_semi_join` is the runtime-filter pattern: probe → filter →
 (optionally) exact semi-join the surviving candidates. With exact
@@ -21,73 +28,120 @@ Every bloom semi/anti join in the library goes through `_filtered_join`.
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from collections.abc import Callable, Iterator
+from typing import Iterator as TIterator
+from typing import Tuple as TTuple
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 
+from dablooms_spark.core.counting_bloom import CountingBloom
+from dablooms_spark.core.scaling_bloom import ScalingBloom, check_layers
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
-
-# Per-executor deserialized-filter cache: the broadcast ships bytes;
-# each Python worker deserializes once per filter, not once per batch.
-# Keyed by the blob OBJECT's identity (the broadcast value is one
-# long-lived object per worker); the entry holds the blob so the id
-# stays valid. Content hashing would risk collisions between filters
-# sharing a prefix/suffix. True LRU (evict oldest, not clear-all) so a
-# many-filter job degrades gracefully instead of thrashing.
-from collections import OrderedDict  # noqa: E402
-
-_FILTER_CACHE: "OrderedDict[int, tuple[object, object]]" = OrderedDict()
-_FILTER_CACHE_MAX = 8
+from dablooms_spark.operators.sizing import conf_bytes, fits
 
 
-def _get_filter(blob: bytes, seed: int):
-    key = id(blob)
-    hit = _FILTER_CACHE.get(key)
-    if hit is not None:
-        _FILTER_CACHE.move_to_end(key)
-        return hit[1]
-    from dablooms_spark.operators.bloom_build import _loads
-
-    filt = _loads(blob, seed)
-    while len(_FILTER_CACHE) >= _FILTER_CACHE_MAX:
-        _FILTER_CACHE.popitem(last=False)
-    _FILTER_CACHE[key] = (blob, filt)
-    return filt
-
-
-def _check_arrow(arr: pa.Array, blob: bytes, seed: int) -> "np.ndarray":
-    import numpy as np
-
-    filt = _get_filter(blob, seed)
-    buf, offs, lens = arrow_byte_view(arr)
+def _hash_keys(keys: pa.Array, seed: int) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """(h1, h2, NULL mask or None) for an Arrow string batch — the one
+    murmur pass of every probe. A NULL key hashes as the empty string,
+    so callers must mask it out."""
+    buf, offs, lens = arrow_byte_view(keys)
     h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-    verdict = filt.check_hashed(h1, h2)
-    if arr.null_count:
-        # a NULL key is definitively not a member (it would otherwise
-        # alias the empty string and could false-positive)
-        verdict &= ~np.asarray(pa.compute.is_null(arr))
+    nulls = np.asarray(pa.compute.is_null(keys)) if keys.null_count else None
+    return h1, h2, nulls
+
+
+def _probe_kernel(keys: pa.Array, shards: np.ndarray | None, table: dict, seed: int) -> np.ndarray:
+    """Membership verdict per key of one Arrow batch against `table`
+    ({shard: [CountingBloom, newest first]}). `shards` routes each key
+    to its shard; None puts every key in shard 0. A shard absent from
+    the table holds no keys, and a NULL key is never a member (it would
+    otherwise alias the empty string and could false-positive)."""
+    h1, h2, nulls = _hash_keys(keys, seed)
+    if shards is None:
+        verdict = check_layers(table.get(0, ()), h1, h2)
+    else:
+        verdict = np.zeros(len(h1), dtype=bool)
+        for s in np.unique(shards):
+            layers = table.get(int(s))
+            if layers:
+                m = shards == s
+                verdict[m] = check_layers(layers, h1[m], h2[m])
+    if nulls is not None:
+        verdict &= ~nulls
     return verdict
 
 
-def bloom_probe_udf(spark, bloom, seed: int = DABLOOMS_SEED):
-    """A reusable vectorized UDF closing over the broadcast filter.
+def _blob_table(bloom) -> dict[int, list[bytes]]:
+    """{0: [layer blobs, newest first]} for a counting or scaling
+    filter — the one-shard table the broadcast probe ships."""
+    layers = reversed(bloom.layers) if isinstance(bloom, ScalingBloom) else [bloom]
+    return {0: [layer.to_bytes() for layer in layers]}
 
-    The probe is end-to-end zero-copy: Arrow string buffers in, hash
-    kernel, boolean buffer out — no per-row Python string objects are
-    ever materialized."""
-    bc = spark.sparkContext.broadcast(bloom.to_bytes())
+
+# Per-worker deserialized-table cache: the broadcast ships bytes; each
+# Python worker deserializes once per filter, not once per batch or
+# task. Keyed by the broadcast value OBJECT's identity (one long-lived
+# object per worker); the entry holds the value so the id stays valid.
+# Content hashing would risk collisions between filters sharing a
+# prefix/suffix. True LRU (evict oldest, not clear-all) so a
+# many-filter job degrades gracefully instead of thrashing.
+_TABLE_CACHE: "OrderedDict[int, tuple[object, dict]]" = OrderedDict()
+_TABLE_CACHE_MAX = 8
+
+
+def _get_table(blobs: dict[int, list[bytes]], seed: int) -> dict[int, list[CountingBloom]]:
+    key = id(blobs)
+    hit = _TABLE_CACHE.get(key)
+    if hit is not None:
+        _TABLE_CACHE.move_to_end(key)
+        return hit[1]
+    table = {
+        s: [CountingBloom.from_bytes(b, seed=seed) for b in layer_blobs]
+        for s, layer_blobs in blobs.items()
+    }
+    while len(_TABLE_CACHE) >= _TABLE_CACHE_MAX:
+        _TABLE_CACHE.popitem(last=False)
+    _TABLE_CACHE[key] = (blobs, table)
+    return table
+
+
+def _probe_udf(spark, blobs: dict[int, list[bytes]], seed: int, sharded: bool):
+    """Vectorized Boolean UDF over a broadcast {shard: [layer blobs,
+    newest first]}: probe(key) against a one-shard table, or
+    probe(key, shard) when `sharded`. End-to-end zero-copy: Arrow
+    string buffers in, hash kernel, boolean buffer out — no per-row
+    Python string objects are ever materialized."""
+    bc = spark.sparkContext.broadcast(blobs)
+    if not sharded:
+
+        @arrow_udf("boolean")
+        def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+            table = _get_table(bc.value, seed)
+            for keys in it:
+                yield pa.array(_probe_kernel(keys, None, table, seed))
+
+        return probe
 
     @arrow_udf("boolean")
-    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        blob = bc.value
-        for arr in it:
-            yield pa.array(_check_arrow(arr, blob, seed))
+    def probe_sharded(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
+        table = _get_table(bc.value, seed)
+        for keys, shards in it:
+            sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
+            yield pa.array(_probe_kernel(keys, sh, table, seed))
 
-    return probe
+    return probe_sharded
+
+
+def bloom_probe_udf(spark, bloom, seed: int = DABLOOMS_SEED):
+    """A reusable vectorized UDF closing over the broadcast filter (a
+    CountingBloom or ScalingBloom)."""
+    return _probe_udf(spark, _blob_table(bloom), seed, sharded=False)
 
 
 def bloom_probe_column(
@@ -208,31 +262,12 @@ def _filtered_join(
     return out
 
 
-def _parse_size_bytes(v: str) -> int:
-    """Spark size-string to bytes ('10m', '1g', '10485760b', '-1')."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(float(s)) * mult
-
-
 def _fits_broadcast(df: DataFrame) -> bool:
-    """Catalyst's sizeInBytes estimate of `df` is within
-    spark.sql.autoBroadcastJoinThreshold ('-1' disables). A failed
-    estimate counts as too big: the shuffled path is always correct."""
-    try:
-        thr = _parse_size_bytes(
-            df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
-        )
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return False
-    return 0 <= est <= thr
+    """Catalyst's estimate of `df` is within
+    spark.sql.autoBroadcastJoinThreshold ('-1' disables)."""
+    return fits(
+        df, conf_bytes(df.sparkSession, "spark.sql.autoBroadcastJoinThreshold", "10m")
+    )
 
 
 def _semi_dim(exact_df: DataFrame, ek: str) -> tuple[DataFrame, bool]:

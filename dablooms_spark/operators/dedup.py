@@ -22,19 +22,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from dablooms_spark.operators.textops import shingle_hashes
-
-try:  # Spark 4.1+: zero-copy Arrow UDFs (ListArray values/offsets direct)
-    from pyspark.sql.functions import arrow_udf as _arrow_udf
-except ImportError:  # pragma: no cover
-    _arrow_udf = None
-
-import pyarrow as pa
 
 _MERSENNE = (1 << 61) - 1
 
@@ -50,13 +43,9 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _list_offsets(arr) -> tuple[np.ndarray, np.ndarray]:
+def _list_offsets(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """(flat int64 values, int64 offsets) from an Arrow list array —
-    zero-copy; also accepts a pandas Series of lists (converted once)."""
-    import pyarrow as pa
-
-    if isinstance(arr, pd.Series):
-        arr = pa.array(arr, type=pa.list_(pa.int64()))
+    zero-copy."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     flat = arr.values.to_numpy(zero_copy_only=False).astype(np.uint64)
@@ -70,37 +59,6 @@ def _list_offsets(arr) -> tuple[np.ndarray, np.ndarray]:
     elif len(offsets) and offsets[-1] != len(flat):
         flat = flat[: offsets[-1]]
     return flat, offsets
-
-
-def _minhash_udf(num_perms: int, seed: int):
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, _MERSENNE, size=num_perms, dtype=np.int64).astype(np.uint64)
-    b = rng.randint(0, _MERSENNE, size=num_perms, dtype=np.int64).astype(np.uint64)
-
-    @pandas_udf("array<long>")
-    def minhash(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            n = len(series)
-            if n == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            flat, offsets = _list_offsets(series)
-            starts = offsets[:-1]
-            empty = offsets[1:] == starts
-            sig = np.zeros((n, num_perms), dtype=np.int64)
-            # vectorize over documents: one (a_j*h+b_j)%P pass + one
-            # segmented min (reduceat) per permutation
-            safe_starts = np.minimum(starts, max(len(flat) - 1, 0))
-            with np.errstate(over="ignore"):
-                for j in range(num_perms):
-                    vals = (a[j] * flat + b[j]) % np.uint64(_MERSENNE)
-                    if len(flat):
-                        mins = np.minimum.reduceat(vals, safe_starts)
-                        sig[:, j] = mins.astype(np.int64)
-            sig[empty] = 0
-            yield pd.Series(list(sig))
-
-    return minhash
 
 
 _ROLL_C = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd multiplier
@@ -199,36 +157,18 @@ def _sig_udf(k: int, num_perms: int, seed: int):
         )
         return pa.StructArray.from_arrays([shingles, sig_arr], ["shingles", "sig"])
 
-    if _arrow_udf is not None:
-
-        @_arrow_udf("struct<shingles: array<long>, sig: array<long>>")
-        def sig(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-            for arr in it:
-                flat, offsets = _list_offsets(arr)
-                if len(offsets) <= 1:
-                    yield to_struct(
-                        np.empty(0, np.int64),
-                        np.zeros(max(len(offsets), 1), np.int64),
-                        np.zeros((max(len(offsets) - 1, 0), num_perms), np.int64),
-                    )
-                    continue
-                yield to_struct(*kernel(flat, offsets))
-
-        return sig
-
-    @pandas_udf("struct<shingles: array<long>, sig: array<long>>")
-    def sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            if len(series) == 0:
-                yield pd.DataFrame({"shingles": [], "sig": []})
+    @arrow_udf("struct<shingles: array<long>, sig: array<long>>")
+    def sig(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for arr in it:
+            flat, offsets = _list_offsets(arr)
+            if len(offsets) <= 1:
+                yield to_struct(
+                    np.empty(0, np.int64),
+                    np.zeros(max(len(offsets), 1), np.int64),
+                    np.zeros((max(len(offsets) - 1, 0), num_perms), np.int64),
+                )
                 continue
-            flat, offsets = _list_offsets(series)
-            sh_values, sh_offsets, sigm = kernel(flat, offsets)
-            shingles_out = [
-                sh_values[sh_offsets[i] : sh_offsets[i + 1]]
-                for i in range(len(sh_offsets) - 1)
-            ]
-            yield pd.DataFrame({"shingles": shingles_out, "sig": list(sigm)})
+            yield to_struct(*kernel(flat, offsets))
 
     return sig
 
@@ -413,27 +353,14 @@ def simhash_fingerprints(
             fp |= np.where(maj, np.uint64(1) << np.uint64(j), np.uint64(0))
         return fp.view(np.int64)
 
-    if _arrow_udf is not None:
-
-        @_arrow_udf("long")
-        def fold(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-            for arr in it:
-                if len(arr) == 0:
-                    yield pa.array([], type=pa.int64())
-                    continue
-                flat, offsets = _list_offsets(arr)
-                yield pa.array(fold_kernel(flat, offsets))
-
-        return df.select(F.col(id_col), fold(tok_hashes).alias("simhash"))
-
-    @pandas_udf("long")
-    def fold(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            if len(series) == 0:
-                yield pd.Series([], dtype="int64")
+    @arrow_udf("long")
+    def fold(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for arr in it:
+            if len(arr) == 0:
+                yield pa.array([], type=pa.int64())
                 continue
-            flat, offsets = _list_offsets(series)
-            yield pd.Series(fold_kernel(flat, offsets))
+            flat, offsets = _list_offsets(arr)
+            yield pa.array(fold_kernel(flat, offsets))
 
     return df.select(F.col(id_col), fold(tok_hashes).alias("simhash"))
 

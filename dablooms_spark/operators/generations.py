@@ -18,7 +18,8 @@ generations — never per-key deletes. Spark-first rendering:
             the same saturating sum as everywhere; counts only grow,
             so membership-OR is preserved: no false negatives, FP
             bounded by the window's summed load vs per-shard
-            geometry), then the standard per-shard cogroup probe.
+            geometry), then the one sharded probe routine
+            (broadcast when small, per-shard cogroup otherwise).
   expire  — drop generations older than the window: a FILTER on the
             gen column (a partition/metadata delete at scale). No
             counter decrements needed — that is the point of
@@ -237,9 +238,10 @@ def generation_window_probe(
 ) -> DataFrame:
     """probe_df + out_col: was the key seen in the last `window`
     generations ending at as_of_gen? The live generations counter-sum
-    per shard (membership-OR preserved — counts only grow), then the
-    standard per-shard cogroup probe runs once; the probe side
-    shuffles once regardless of window width."""
+    per shard (membership-OR preserved — counts only grow), then
+    sharded_bloom_probe runs once — broadcast when the window's blobs
+    are small, otherwise a cogroup whose probe side shuffles once
+    regardless of window width."""
     from dablooms_spark.operators.sharded import sharded_bloom_probe
 
     live = live_window(gens_df, as_of_gen, window)

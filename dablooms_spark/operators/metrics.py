@@ -14,15 +14,24 @@ No false negatives is the hard guarantee and is asserted elsewhere
 (probe of the inserted set); FP rate is statistical — observed ≤ ε is
 the expectation, with sampling noise ~sqrt(ε/n), which is why the
 report carries the probe count alongside the rate.
+
+Every report probes through the library's one membership kernel
+(bloom_probe._probe_kernel): observed_fp_rate via bloom_probe_column,
+observed_fp_rate_sharded via sharded_scaling_probe. The per-layer
+report needs every layer's answer rather than their OR, so it reuses
+only the kernel's hash-and-NULL-mask step and fills its own per-layer
+hit matrix.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 
@@ -94,62 +103,34 @@ def observed_fp_rate_per_layer(
     (observed_fp_rate) can hide one overloaded layer behind several
     underloaded ones; this report cannot.
 
-    One scan: the filter blob is broadcast once, every batch is hashed
-    ONCE (layers share the murmur base hashes; only the
-    Kirsch-Mitzenmacher expansion differs per geometry), each layer
-    contributes one boolean per key, and the per-layer hit counts fall
+    One scan: the layers are broadcast once (the probe kernel's table,
+    deserialized once per worker), every batch is hashed ONCE (layers
+    share the murmur base hashes; only the Kirsch-Mitzenmacher
+    expansion differs per geometry), EVERY layer contributes one
+    boolean per key (no early skip), and the per-layer hit counts fall
     out of a map-side partial aggregation over the hit-vector column —
     no shuffle of probe rows, L+1 aggregate cells per partition. The
     layer metadata (first_id, eps, capacity, live count) is driver-side
     knowledge stamped in as literals, so the report stays a lazy
     DataFrame."""
-    from dablooms_spark.operators.bloom_probe import _get_filter
+    from dablooms_spark.operators.bloom_probe import _blob_table, _get_table, _hash_keys
 
     spark = negatives.sparkSession
-    bc = spark.sparkContext.broadcast(scaling.to_bytes())
+    bc = spark.sparkContext.broadcast(_blob_table(scaling))
     n_layers = len(scaling.layers)
 
-    def _layer_hits_arrow(arr: pa.Array) -> pa.Array:
-        import numpy as np
-        import pyarrow.compute as pc
-
-        from dablooms_spark.functions.arrow_utils import arrow_byte_view
-        from dablooms_spark.functions.murmur import dablooms_hash_words_buffer
-
-        filt = _get_filter(bc.value, seed)
-        buf, offs, lens = arrow_byte_view(arr)
-        h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-        mat = np.empty((len(h1), len(filt.layers)), dtype=bool)
-        for j, layer in enumerate(filt.layers):
-            mat[:, j] = layer.check_hashed(h1, h2)
-        if arr.null_count:
-            mat &= ~np.asarray(pc.is_null(arr))[:, None]
-        offsets = pa.array(
-            np.arange(len(h1) + 1, dtype=np.int32) * len(filt.layers)
-        )
-        return pa.ListArray.from_arrays(offsets, pa.array(mat.reshape(-1)))
-
-    try:
-        from pyspark.sql.functions import arrow_udf as _audf
-    except ImportError:  # pragma: no cover - older Spark fallback
-        _audf = None
-
-    if _audf is not None:
-
-        @_audf("array<boolean>")
-        def layer_hits(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-            for arr in it:
-                yield _layer_hits_arrow(arr)
-
-    else:
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf as _pudf
-
-        @_pudf("array<boolean>")
-        def layer_hits(it):
-            for series in it:
-                arr = pa.array(series, type=pa.large_string())
-                yield pd.Series(_layer_hits_arrow(arr).to_pylist())
+    @arrow_udf("array<boolean>")
+    def layer_hits(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        layers = _get_table(bc.value, seed)[0][::-1]  # oldest first
+        for arr in it:
+            h1, h2, nulls = _hash_keys(arr, seed)
+            mat = np.empty((len(h1), n_layers), dtype=bool)
+            for j, layer in enumerate(layers):
+                mat[:, j] = layer.check_hashed(h1, h2)
+            if nulls is not None:
+                mat &= ~nulls[:, None]
+            offsets = pa.array(np.arange(len(h1) + 1, dtype=np.int32) * n_layers)
+            yield pa.ListArray.from_arrays(offsets, pa.array(mat.reshape(-1)))
 
     probed = negatives.select(
         layer_hits(F.col(key_col).cast("string")).alias("__hits")

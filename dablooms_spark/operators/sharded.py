@@ -1,11 +1,12 @@
-"""Sharded counting bloom — filters too big to broadcast.
+"""Sharded counting bloom — filters too big to broadcast — and the one
+sharded probe routine.
 
 A single filter sized for 10^12 keys at ε=0.01 is ~1.4 TB of
 nibbles: it can neither broadcast nor live on the driver. The sharded
 form keeps the filter AS a DataFrame — S shards, each a self-contained
 counting bloom over the keys that hash-route to it — and probes by
 routing probe rows to their shard (`pmod(xxhash64(key), S)`, pure
-Catalyst on both sides) and co-grouping them with the shard blob.
+Catalyst on both sides).
 
 Scale shape:
 - build: per input partition, one partial blob per TOUCHED shard
@@ -13,11 +14,19 @@ Scale shape:
   shuffle merges partials per shard — rows never shuffle
   (counting-bloom merge is an exact saturating counter-sum, so
   shard filters are bit-identical to single-node builds).
-- probe: the probe side shuffles ONCE on (shard, salt) — the
-  unavoidable cost of consulting state too big to replicate; the salt
-  bounds each cogroup task's pandas frame so a hot shard can't OOM a
-  task. Verdicts keep the bloom invariant: no false negatives,
-  false positives ≤ the per-shard configured bound.
+- probe: `_sharded_probe` serves every sharded filter shape — sharded
+  counting, sharded scaling (operators/sharded_scaling.py) and
+  rotating generations (operators/generations.py) — over filter rows
+  (shard, first_id, blob, num_shards), one counting layer per row
+  (a counting shard is one layer at first_id 0). Filters whose blobs
+  fit spark.dablooms.probe.autoBroadcastBytes (default 64 MiB; '0'
+  forces the cogroup) are collected and broadcast to a vectorized UDF
+  — zero shuffle of the probe side. Bigger filters co-group probe rows
+  with their shard's layers on (shard, salt): the probe side shuffles
+  ONCE, and the salt bounds each cogroup task's batch so a hot shard
+  can't OOM a task. Both topologies call the same membership kernel
+  (bloom_probe._probe_kernel), so verdicts are identical: no false
+  negatives, false positives ≤ the per-shard configured bound.
 
 Reference parity: semantics per shard are exactly
 counting_bloom_add/check (src/dablooms.c ≈L202/≈238); sharding is the
@@ -28,21 +37,19 @@ express.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Iterator as TIterator
-from typing import Tuple as TTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
-from dablooms_spark.operators.bloom_probe import _filtered_join
+from dablooms_spark.operators.bloom_probe import _filtered_join, _probe_kernel, _probe_udf
+from dablooms_spark.operators.sizing import conf_bytes, fits_driver_merge
 
 _SHARD_SEED = 0x5D
 
@@ -51,83 +58,6 @@ def _shard_expr(key, num_shards: int):
     # JVM-side routing: both build and probe compute the same shard in
     # whole-stage codegen; murmur is only used for the filter bits
     return F.pmod(F.xxhash64(key, F.lit(_SHARD_SEED)), F.lit(num_shards))
-
-
-def _probe_broadcast_bytes(spark) -> int:
-    """Size ceiling under which a sharded filter's blobs are collected
-    and BROADCAST for a shuffle-free probe instead of co-grouped
-    (guide §2.4/§3.1: a broadcast of the small side replaces a shuffle
-    of the big side — here the big side is every probe row with all
-    its payload columns). Parameterised via
-    spark.dablooms.probe.autoBroadcastBytes (size string; '0' disables
-    broadcast routing entirely); the 64 MiB default is an
-    executor-memory bound, independent of data scale: filters above it
-    keep the cogroup topology that never materializes the filter in
-    one place."""
-    from dablooms_spark.operators.bloom_probe import _parse_size_bytes
-
-    try:
-        v = spark.conf.get("spark.dablooms.probe.autoBroadcastBytes", "64m")
-    except Exception:
-        v = "64m"
-    try:
-        return _parse_size_bytes(v)
-    except Exception:
-        return 64 << 20
-
-
-def _measure_blobs(blobs_df: DataFrame) -> tuple[DataFrame, int]:
-    """Persist the blob rows and return (persisted_df, total_blob_bytes).
-
-    One tiny aggregate over the (already small) blob side decides the
-    probe topology; the persist makes the decision pass and the probe
-    itself share ONE computation of the build lineage. In the
-    broadcast outcome the cache is dropped immediately after collect;
-    in the cogroup outcome it stays so the probe reads cached blobs."""
-    blobs_df = blobs_df.persist()
-    row = blobs_df.agg(
-        F.sum(F.length(F.col("blob"))).alias("__bytes")
-    ).first()
-    total = int(row["__bytes"] or 0)
-    return blobs_df, total
-
-
-def _broadcast_counting_probe_udf(spark, shard_blobs: dict, seed: int):
-    """Vectorized membership UDF over (key_str, shard) against a
-    broadcast {shard: blob} dict — the shuffle-free probe for sharded
-    counting filters small enough to replicate. Arrow-native; filters
-    deserialize once per task (iterator form, guide §4.5)."""
-    bc = spark.sparkContext.broadcast(shard_blobs)
-
-    def probe_batch(keys: pa.Array, shards: np.ndarray, cache: dict) -> np.ndarray:
-        blobs = bc.value
-        buf, offs, lens = arrow_byte_view(keys)
-        h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-        verdict = np.zeros(len(shards), dtype=bool)
-        for s in np.unique(shards):
-            blob = blobs.get(int(s))
-            if blob is None:
-                continue
-            cb = cache.get(int(s))
-            if cb is None:
-                cb = CountingBloom.from_bytes(blob, seed=seed)
-                cache[int(s)] = cb
-            m = shards == s
-            verdict[m] = cb.check_hashed(h1[m], h2[m])
-        if keys.null_count:
-            # NULL keys are definite non-members (parity with the
-            # cogroup path's mask)
-            verdict &= ~np.asarray(pa.compute.is_null(keys))
-        return verdict
-
-    @arrow_udf("boolean")
-    def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
-        cache: dict = {}
-        for keys, shards in it:
-            sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
-            yield pa.array(probe_batch(keys, sh, cache))
-
-    return probe
 
 
 def build_sharded_counting_bloom(
@@ -195,14 +125,8 @@ def build_sharded_counting_bloom(
     # counter-sum them driver-side — bit-identical (the merge is an
     # order-invariant saturating counter sum) and gated on the same
     # Catalyst-estimate ceiling as the other driver merges.
-    from dablooms_spark.operators.bloom_build import (
-        _driver_merge_max_bytes,
-        _est_plan_bytes,
-    )
-
     spark = df.sparkSession
-    est = _est_plan_bytes(sdf)
-    if est is not None and 0 <= est <= _driver_merge_max_bytes(spark):
+    if fits_driver_merge(sdf):
         by_shard: dict[int, list[bytes]] = {}
         counts: dict[int, int] = {}
         for r in partials.collect():
@@ -283,6 +207,108 @@ def sharded_bloom_remove(
     )
 
 
+def _check_num_shards(built: int, num_shards: int) -> None:
+    if int(built) != num_shards:
+        raise ValueError(
+            f"num_shards drift: layer rows were built with "
+            f"num_shards={built}, probe called with "
+            f"{num_shards} — shard routing and layer width differ"
+        )
+
+
+def _sharded_probe(
+    probe_df: DataFrame,
+    key: Column,
+    rows_df: DataFrame,
+    num_shards: int,
+    salt: int,
+    seed: int,
+    out_col: str,
+) -> DataFrame:
+    """probe_df + out_col: membership of the string `key` against
+    filter rows (shard, first_id, blob, num_shards) — one counting
+    layer per row, a shard's layers checked newest (largest first_id)
+    first. Rows stamped with another num_shards raise `num_shards
+    drift`: routing and layer width would both differ.
+
+    Topology is SIZE-ADAPTIVE: when the rows' total blob bytes fit
+    spark.dablooms.probe.autoBroadcastBytes (default 64 MiB, '0'
+    disables) they are collected once and broadcast to a vectorized
+    UDF column — zero shuffle of the probe side, which otherwise moves
+    EVERY probe row with all its payload columns. Bigger filters keep
+    the cogroup below, which never materializes the filter in one
+    place: probe rows co-group with their shard's rows on (shard,
+    salt), the rows replicating `salt` ways so a hot shard splits
+    across tasks. Both call bloom_probe._probe_kernel."""
+    spark = probe_df.sparkSession
+    shard = _shard_expr(key, num_shards)
+    thr = conf_bytes(spark, "spark.dablooms.probe.autoBroadcastBytes", "64m")
+    if thr > 0:
+        # one tiny aggregate over the (already small) blob side decides
+        # the topology; the persist lets that pass and the probe share
+        # ONE computation of the build lineage (dropped right after the
+        # collect in the broadcast outcome)
+        rows_df = rows_df.persist()
+        total = rows_df.agg(F.sum(F.length("blob"))).first()[0] or 0
+        if total <= thr:
+            rows = rows_df.collect()
+            rows_df.unpersist()
+            blobs: dict[int, list[bytes]] = {}
+            for r in sorted(rows, key=lambda r: -r.first_id):
+                _check_num_shards(r.num_shards, num_shards)
+                blobs.setdefault(r.shard, []).append(bytes(r.blob))
+            probe = _probe_udf(spark, blobs, seed, sharded=True)
+            return probe_df.withColumn(out_col, probe(key, shard))
+    in_cols = probe_df.columns
+    # __key_str is the JVM CAST(key AS STRING) — the exact bytes the
+    # build hashed — and reaches the kernel as Arrow, NULLs kept
+    p = probe_df.select(
+        "*",
+        key.alias("__key_str"),
+        shard.alias("__shard"),
+        F.pmod(F.xxhash64(key, F.lit(_SHARD_SEED + 1)), F.lit(salt)).alias("__salt"),
+    )
+    # __salt MUST be long on both sides: cogroup hash-partitions each
+    # side independently and int 0 / long 0 hash to different shuffle
+    # partitions — an int salt silently splits groups into a
+    # probe-only half (all-False verdicts) and an orphan blob half
+    # whenever the sides don't coalesce into one partition
+    b = rows_df.select(
+        F.col("shard").cast("long").alias("__shard"),
+        F.explode(
+            F.sequence(F.lit(0).cast("long"), F.lit(salt - 1).cast("long"))
+        ).alias("__salt"),
+        "first_id",
+        "blob",
+        "num_shards",
+    )
+
+    def probe_group(probe_t: pa.Table, rows_t: pa.Table) -> pa.Table:
+        verdict = np.zeros(probe_t.num_rows, dtype=bool)
+        if probe_t.num_rows:
+            for built in set(rows_t.column("num_shards").to_pylist()):
+                _check_num_shards(built, num_shards)
+            rows_t = rows_t.sort_by([("first_id", "descending")])
+            layers = [
+                CountingBloom.from_bytes(blob, seed=seed)
+                for blob in rows_t.column("blob").to_pylist()
+            ]
+            keys = probe_t.column("__key_str").combine_chunks()
+            verdict = _probe_kernel(keys, None, {0: layers}, seed)
+        return probe_t.select(in_cols).append_column(out_col, pa.array(verdict))
+
+    return (
+        p.groupBy("__shard", "__salt")
+        .cogroup(b.groupBy("__shard", "__salt"))
+        .applyInArrow(
+            probe_group,
+            schema=StructType(
+                probe_df.schema.fields + [StructField(out_col, BooleanType())]
+            ),
+        )
+    )
+
+
 def sharded_bloom_probe(
     probe_df: DataFrame,
     key_col: str,
@@ -293,92 +319,25 @@ def sharded_bloom_probe(
     out_col: str = "is_member",
     key_cast: str | None = None,
 ) -> DataFrame:
-    """probe_df + a Boolean membership column, for a sharded filter.
-
-    Probe rows co-group with their shard's blob on (shard, salt): the
-    blob side replicates `salt` ways so a hot shard splits across
-    tasks and no task materializes more than ~rows/(S·salt) as pandas.
+    """probe_df + a Boolean membership column, for a sharded filter
+    (shard, blob, n): each shard is one layer of `_sharded_probe`,
+    which picks the broadcast or the (shard, salt) cogroup topology.
     No false negatives; FPs ≤ the per-shard bound.
 
     `key_cast`: optional intermediate type applied BEFORE the string
     cast — must match the build side's cast (see bloom_probe_column).
-
-    Topology is SIZE-ADAPTIVE (guide §2.4): when the filter's total
-    blob bytes fit spark.dablooms.probe.autoBroadcastBytes (default
-    64 MiB, '0' disables) the blobs are collected + broadcast and the
-    verdict is a vectorized UDF column — zero shuffle of the probe
-    side. Bigger filters keep the cogroup topology below, which never
-    materializes the filter in one place. Verdicts are identical
-    either way (same blobs, same hash kernel, same NULL handling).
     """
     key = F.col(key_col)
     if key_cast is not None:
         key = key.cast(key_cast)
-    key = key.cast("string")
-    spark = probe_df.sparkSession
-    thr = _probe_broadcast_bytes(spark)
-    if thr > 0:
-        blobs_df, total = _measure_blobs(blobs_df)
-        if total <= thr:
-            rows = blobs_df.collect()
-            blobs_df.unpersist()
-            shard_blobs = {int(r["shard"]): bytes(r["blob"]) for r in rows}
-            probe = _broadcast_counting_probe_udf(spark, shard_blobs, seed)
-            return probe_df.withColumn(
-                out_col, probe(key, _shard_expr(key, num_shards))
-            )
-    # __key_str is the JVM CAST(key AS STRING) — the exact bytes the
-    # build hashed; re-rendering python-side (astype(str)) can differ
-    # for doubles/decimals and would false-negative
-    p = (
-        probe_df.withColumn("__key_str", key)
-        .withColumn("__shard", _shard_expr(key, num_shards))
-        .withColumn(
-            "__salt", F.pmod(F.xxhash64(key, F.lit(_SHARD_SEED + 1)), F.lit(salt))
-        )
-    )
-    # __salt MUST be long on both sides: cogroup hash-partitions each
-    # side independently and int 0 / long 0 hash to different shuffle
-    # partitions — an int salt silently splits groups into a
-    # probe-only half (all-False verdicts) and an orphan blob half
-    # whenever the sides don't coalesce into one partition
-    b = blobs_df.select(
-        F.col("shard").cast("long").alias("__shard"),
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(salt - 1).cast("long"))
-        ).alias("__salt"),
+    rows = blobs_df.select(
+        "shard",
+        F.lit(0).cast("long").alias("first_id"),
         "blob",
+        F.lit(num_shards).cast("long").alias("num_shards"),
     )
-    out_schema = StructType(
-        list(probe_df.schema.fields) + [StructField(out_col, BooleanType())]
-    )
-    in_cols = [f.name for f in probe_df.schema.fields]
-
-    def probe_group(keys, probe_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-        if probe_pdf.empty:
-            return pd.DataFrame(columns=in_cols + [out_col])
-        out = probe_pdf[in_cols]
-        if blob_pdf.empty:
-            # shard holds no keys: every probe is a definite negative
-            return out.assign(**{out_col: False})
-        cb = CountingBloom.from_bytes(bytes(blob_pdf.blob.iloc[0]), seed=seed)
-        keys_str = probe_pdf["__key_str"]
-        arr = pa.array(keys_str.astype(str), type=pa.large_string())
-        buf, offs, lens = arrow_byte_view(arr)
-        h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-        verdict = cb.check_hashed(h1, h2)
-        # a NULL key is a definite non-member — astype(str) renders it
-        # as the literal 'None'/'nan', which must not alias a real key
-        # (mirrors _check_arrow's null handling in bloom_probe)
-        nulls = keys_str.isna().to_numpy()
-        if nulls.any():
-            verdict &= ~nulls
-        return out.assign(**{out_col: verdict})
-
-    return (
-        p.groupBy("__shard", "__salt")
-        .cogroup(b.groupBy("__shard", "__salt"))
-        .applyInPandas(probe_group, schema=out_schema)
+    return _sharded_probe(
+        probe_df, key.cast("string"), rows, num_shards, salt, seed, out_col
     )
 
 

@@ -4,8 +4,8 @@ broadcast can't reach.
 `build_scaling_bloom` materializes one driver-side filter and probes
 by broadcast; at 10^12 keys the filter is tens of GB and neither fits
 the driver nor a broadcast. This module keeps the scaling filter AS a
-DataFrame of (shard, layer) rows and probes by co-group, composing the
-two at-scale topologies already in the library:
+DataFrame of (shard, layer) rows, composing the two at-scale
+topologies already in the library:
 
   * key-hash sharding (operators/sharded.py): a key's membership
     question touches exactly ONE shard — probe volume never multiplies
@@ -30,6 +30,11 @@ is checked only against its own shard's layers, so its compound FP is
 Σ_k ε_k ≤ ε regardless of shard count — sharding here is free in
 space, unlike the range path's per-shard budget.
 
+Probe: the layer rows are exactly the input of the one sharded probe
+routine (sharded._sharded_probe) — broadcast when small, (shard, salt)
+cogroup otherwise — and every key walks its shard's layers newest
+first through the one membership kernel (bloom_probe._probe_kernel).
+
 Reference parity: per (shard, layer) semantics are exactly
 counting_bloom_add/check (src/dablooms.c ≈L202/≈238) under the
 scaling filter's layer schedule (≈L437); the sharded topology is what
@@ -39,16 +44,12 @@ the single mmap file cannot express.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Iterator as TIterator
-from typing import Tuple as TTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
-from pyspark.sql.types import BooleanType, StructField, StructType
 
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.geometry import BloomGeometry
@@ -56,14 +57,8 @@ from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.hashing import km_expand
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
 from dablooms_spark.operators.bloom_probe import _filtered_join
-from dablooms_spark.operators.sharded import (
-    _SHARD_SEED,
-    _measure_blobs,
-    _probe_broadcast_bytes,
-    _shard_expr,
-)
-
-_POLY = 6.0 / (np.pi ** 2)  # retained for older callers; see fixed_layer_eps
+from dablooms_spark.operators.sharded import _shard_expr, _sharded_probe
+from dablooms_spark.operators.sizing import fits_driver_merge
 
 _PIECE_SCHEMA = (
     "shard long, layer long, idx binary, exc binary, vals binary, "
@@ -275,15 +270,8 @@ def build_sharded_scaling_layers(
     # invariance), gated on the Catalyst-estimate ceiling shared with
     # the other driver merges. The layer rows stay a DataFrame either
     # way (here a local relation).
-    from dablooms_spark.core.codec import delta_decode as _dd
-    from dablooms_spark.operators.bloom_build import (
-        _driver_merge_max_bytes,
-        _est_plan_bytes,
-    )
-
     spark = df.sparkSession
-    est = _est_plan_bytes(df)
-    if est is not None and 0 <= est <= _driver_merge_max_bytes(spark):
+    if fits_driver_merge(df):
         groups: dict[tuple[int, int], list] = {}
         for r in pieces.collect():
             groups.setdefault((int(r.shard), int(r.layer)), []).append(r)
@@ -296,7 +284,7 @@ def build_sharded_scaling_layers(
             max_id = 0
             for r in groups[(s, li)]:
                 np.add.at(
-                    acc, _dd(r.idx, r.exc),
+                    acc, delta_decode(r.idx, r.exc),
                     np.frombuffer(r.vals, dtype=np.uint8).astype(np.int32),
                 )
                 n += int(r.n)
@@ -347,52 +335,6 @@ def build_sharded_scaling_layers(
     )
 
 
-def _broadcast_scaling_probe_udf(spark, shard_layers: dict, seed: int):
-    """Vectorized membership UDF over (key_str, shard) against
-    broadcast {shard: [layer blobs newest-first]} — the shuffle-free
-    probe for sharded scaling filters small enough to replicate. Same
-    newest-first early-skip loop as the cogroup path; layers
-    deserialize once per task (iterator form, guide §4.5)."""
-    bc = spark.sparkContext.broadcast(shard_layers)
-
-    def probe_batch(keys: pa.Array, shards: np.ndarray, cache: dict) -> np.ndarray:
-        layers = bc.value
-        buf, offs, lens = arrow_byte_view(keys)
-        h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-        verdict = np.zeros(len(shards), dtype=bool)
-        for s in np.unique(shards):
-            blobs = layers.get(int(s))
-            if not blobs:
-                continue
-            cbs = cache.get(int(s))
-            if cbs is None:
-                cbs = [CountingBloom.from_bytes(b, seed=seed) for b in blobs]
-                cache[int(s)] = cbs
-            idx = np.flatnonzero(shards == s)
-            unknown = np.ones(len(idx), dtype=bool)
-            for cb in cbs:
-                if not unknown.any():
-                    break
-                sub = idx[unknown]
-                hit = cb.check_hashed(h1[sub], h2[sub])
-                verdict[sub[hit]] = True
-                unknown[np.flatnonzero(unknown)[hit]] = False
-        if keys.null_count:
-            # NULL keys are definite non-members (parity with the
-            # cogroup path's mask)
-            verdict &= ~np.asarray(pa.compute.is_null(keys))
-        return verdict
-
-    @arrow_udf("boolean")
-    def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
-        cache: dict = {}
-        for keys, shards in it:
-            sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
-            yield pa.array(probe_batch(keys, sh, cache))
-
-    return probe
-
-
 def sharded_scaling_probe(
     probe_df: DataFrame,
     key_col: str,
@@ -404,116 +346,20 @@ def sharded_scaling_probe(
 ) -> DataFrame:
     """probe_df + Boolean membership against a sharded scaling filter.
 
-    Probe rows co-group with their shard's LAYER rows on (shard,
-    salt); the layer side replicates `salt` ways so a hot shard splits
-    across tasks. Layers are consulted newest-first with early-skip —
-    once a key answers positive it drops out of later (older) layer
-    checks, the vectorized form of scaling_bloom_check's loop
-    (src/dablooms.c ≈L238 family). No false negatives; FPs ≤ the
-    compound Σ layer budgets ≤ sb_eps.
-
-    Topology is SIZE-ADAPTIVE (guide §2.4): when the layer rows' total
-    blob bytes fit spark.dablooms.probe.autoBroadcastBytes (default
-    64 MiB, '0' disables) the layers are collected + broadcast and the
-    verdict is a vectorized UDF column — zero shuffle of the probe
-    side (which otherwise moves EVERY probe row with all its payload
-    columns through the cogroup). Bigger filters keep the cogroup
-    topology, which never materializes the filter in one place.
-    Verdicts are identical either way (same blobs, same newest-first
-    early-skip loop, same NULL handling)."""
-    key = F.col(key_col).cast("string")
-    spark = probe_df.sparkSession
-    thr = _probe_broadcast_bytes(spark)
-    if thr > 0:
-        layers_df2, total = _measure_blobs(_ensure_num_shards(layers_df, num_shards))
-        if total <= thr:
-            rows = layers_df2.collect()
-            layers_df2.unpersist()
-            if rows:
-                built_shards = int(rows[0]["num_shards"])
-                if built_shards != num_shards:
-                    raise ValueError(
-                        f"num_shards drift: layer rows were built with "
-                        f"num_shards={built_shards}, probe called with "
-                        f"{num_shards} — shard routing and layer width differ"
-                    )
-            shard_layers: dict[int, list[bytes]] = {}
-            for r in sorted(rows, key=lambda r: -int(r["first_id"])):
-                shard_layers.setdefault(int(r["shard"]), []).append(
-                    bytes(r["blob"])
-                )
-            probe = _broadcast_scaling_probe_udf(spark, shard_layers, seed)
-            return probe_df.withColumn(
-                out_col, probe(key, _shard_expr(key, num_shards))
-            )
-        layers_df = layers_df2
-    # __key_str is the JVM CAST(key AS STRING) — the exact bytes the
-    # build hashed; re-rendering python-side (astype(str)) can differ
-    # for doubles/decimals and would false-negative
-    p = (
-        probe_df.withColumn("__key_str", key)
-        .withColumn("__shard", _shard_expr(key, num_shards))
-        .withColumn(
-            "__salt", F.pmod(F.xxhash64(key, F.lit(_SHARD_SEED + 1)), F.lit(salt))
-        )
+    A key is checked against its own shard's layers, newest first with
+    early skip — once a key answers positive it drops out of later
+    (older) layer checks, the vectorized form of scaling_bloom_check's
+    loop (src/dablooms.c ≈L537). The layer rows go to
+    sharded._sharded_probe, which broadcasts them or co-groups probe
+    rows with them on (shard, salt) by size. No false negatives; FPs ≤
+    the compound Σ layer budgets ≤ sb_eps. Layer rows stamped with
+    another num_shards raise `num_shards drift`."""
+    rows = _ensure_num_shards(layers_df, num_shards).select(
+        "shard", "first_id", "blob", "num_shards"
     )
-    # __salt MUST be long on both sides: the probe side's pmod(xxhash64)
-    # is long, and cogroup hash-partitions each side independently —
-    # an int salt here lands the blob rows in DIFFERENT shuffle
-    # partitions than their probe rows (int 0 and long 0 hash apart),
-    # silently splitting every group into a probe-only half (all-False
-    # verdicts) and an orphan blob half
-    b = _ensure_num_shards(layers_df, num_shards).select(
-        F.col("shard").cast("long").alias("__shard"),
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(salt - 1).cast("long"))
-        ).alias("__salt"),
-        "first_id",
-        "blob",
-        "num_shards",
-    )
-    out_schema = StructType(
-        list(probe_df.schema.fields) + [StructField(out_col, BooleanType())]
-    )
-    in_cols = [f.name for f in probe_df.schema.fields]
-
-    def probe_group(keys, probe_pdf: pd.DataFrame, layer_pdf: pd.DataFrame) -> pd.DataFrame:
-        if probe_pdf.empty:
-            return pd.DataFrame(columns=in_cols + [out_col])
-        out = probe_pdf[in_cols]
-        if layer_pdf.empty:
-            return out.assign(**{out_col: False})
-        built_shards = int(layer_pdf["num_shards"].iloc[0])
-        if built_shards != num_shards:
-            raise ValueError(
-                f"num_shards drift: layer rows were built with "
-                f"num_shards={built_shards}, probe called with "
-                f"{num_shards} — shard routing and layer width differ"
-            )
-        keys_str = probe_pdf["__key_str"]
-        arr = pa.array(keys_str.astype(str), type=pa.large_string())
-        buf, offs, lens = arrow_byte_view(arr)
-        h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-        verdict = np.zeros(len(probe_pdf), dtype=bool)
-        unknown = np.ones(len(probe_pdf), dtype=bool)
-        layer_pdf = layer_pdf.sort_values("first_id", ascending=False)
-        for blob in layer_pdf.blob:
-            if not unknown.any():
-                break
-            cb = CountingBloom.from_bytes(bytes(blob), seed=seed)
-            idx = np.flatnonzero(unknown)
-            hit = cb.check_hashed(h1[idx], h2[idx])
-            verdict[idx[hit]] = True
-            unknown[idx[hit]] = False
-        nulls = keys_str.isna().to_numpy()
-        if nulls.any():
-            verdict &= ~nulls
-        return out.assign(**{out_col: verdict})
-
-    return (
-        p.groupBy("__shard", "__salt")
-        .cogroup(b.groupBy("__shard", "__salt"))
-        .applyInPandas(probe_group, schema=out_schema)
+    return _sharded_probe(
+        probe_df, F.col(key_col).cast("string"), rows, num_shards, salt, seed,
+        out_col,
     )
 
 

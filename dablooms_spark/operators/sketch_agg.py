@@ -34,6 +34,7 @@ from dablooms_spark.core.tdigest import TDigest
 from dablooms_spark.core.theta import ThetaSketch
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.operators.bloom_build import _tree_merge
+from dablooms_spark.operators.sizing import fits_driver_merge
 
 _KINDS = {
     "hll": (HyperLogLog, "string"),
@@ -324,14 +325,8 @@ def _grouped_merge_finalize(
     # the driver when the input itself is large. Results identical —
     # all sketches here merge associatively, and the per-group fold
     # order was already shuffle-arrival order (arbitrary) before.
-    from dablooms_spark.operators.bloom_build import (
-        _driver_merge_max_bytes,
-        _est_plan_bytes,
-    )
-
     spark = df.sparkSession
-    est = _est_plan_bytes(sdf)
-    if est is not None and 0 <= est <= _driver_merge_max_bytes(spark):
+    if fits_driver_merge(sdf):
         merged: dict[str, object] = {}
         for r in partials.collect():
             sk = _loads_any(r.blob)

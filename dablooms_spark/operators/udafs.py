@@ -34,6 +34,7 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from dablooms_spark.operators.sizing import fits, plan_bytes
 from dablooms_spark.operators.sketch_agg import _KINDS, _make, _update_from_arrow
 
 
@@ -82,20 +83,20 @@ def agg_sketch_by(
       partial — grouped_sketch_agg: per-partition partial sketches,
                 blob-only shuffle. The at-scale plan.
       auto    — route on Catalyst's sizeInBytes for df: under
-                udaf_bytes_limit use the udaf path, otherwise WARN and
-                reroute to partials (same blobs — every sketch's build
-                is merge-order invariant where bit-identity matters).
+                udaf_bytes_limit use the udaf path, otherwise (or when
+                the estimate fails) WARN and reroute to partials (same
+                blobs — every sketch's build is merge-order invariant
+                where bit-identity matters).
     """
     from dablooms_spark.operators.sketch_agg import grouped_sketch_agg
 
     if engine not in ("auto", "udaf", "partial"):
         raise ValueError(f"unknown engine {engine!r}")
     if engine == "auto":
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        if size < 0 or size > udaf_bytes_limit:
+        if not fits(df, udaf_bytes_limit):
             warnings.warn(
-                f"agg_sketch_by: input ~{size} bytes exceeds the "
-                f"{udaf_bytes_limit}-byte UDAF budget; rerouting to "
+                f"agg_sketch_by: input ~{plan_bytes(df)} bytes is not known "
+                f"to fit the {udaf_bytes_limit}-byte UDAF budget; rerouting to "
                 "grouped_sketch_agg (per-partition partials, blob-only "
                 "shuffle) — the grouped-agg pandas UDAF would shuffle "
                 "every raw row of a group to a single task",

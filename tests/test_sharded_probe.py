@@ -9,8 +9,13 @@ a shard that holds no keys reported absent."""
 
 import datetime as dt
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+
+from dablooms_spark.core import ScalingBloom
+from dablooms_spark.operators.bloom_probe import _probe_kernel
 
 from dablooms_spark.operators.generations import (
     build_generation_filters,
@@ -141,3 +146,24 @@ def test_broadcast_and_cogroup_probe_agree(spark, shape):
                 _run(spark, setting, lambda: probe_fn(probe, SHARDS * 2))
     probe.unpersist()
     members.unpersist()
+
+
+def test_probe_kernel_nulls_and_shards():
+    """The kernel itself, without Spark: the table's shard-1 filter
+    holds the empty string, which a NULL key would alias if it were not
+    masked; a key routed to a shard absent from the table is never a
+    member; a scaling filter's layers answer exactly as
+    ScalingBloom.check."""
+    sb = ScalingBloom(capacity=8, error_rate=0.01)
+    members = [""] + [f"k{i}" for i in range(40)]
+    sb.add(members, list(range(len(members))))
+    assert len(sb.layers) > 1
+    table = {1: list(reversed(sb.layers))}
+    keys = pa.array(members + [None, "k0"], type=pa.large_string())
+    shards = np.array([1] * len(members) + [1, 2])
+    verdict = _probe_kernel(keys, shards, table, sb.seed)
+    assert verdict[: len(members)].all()
+    assert not verdict[-2] and not verdict[-1]
+    mixed = members + [f"x{i}" for i in range(500)]
+    got = _probe_kernel(pa.array(mixed), None, {0: table[1]}, sb.seed)
+    assert (got == sb.check(mixed)).all() and not got.all()
